@@ -7,10 +7,11 @@ F1 is NaN everywhere (R/fuzzylink.R:366-370).
 
 Scale design: a global sort of 10^12 pairs just to pick one scalar is the
 wrong plan. We aggregate probabilities into a bounded histogram first
-(one shuffle, ≤ bins rows), then run the same running-sum program over the
-histogram with a single-partition window — mathematically identical when
-probabilities are bucketed, and the bucket width bounds the cutoff error at
-1/bins. ``exact=True`` keeps the reference's exact per-row program for
+(one shuffle, <= bins x 3 (bucket, label) rows collected to the driver),
+then run the same running-sum program over those rows in numpy —
+mathematically identical when probabilities are bucketed, and the bucket
+width bounds the cutoff error at 1/bins. ``exact=True`` keeps the
+reference's exact per-row program (``_f1_frame``, Spark windows) for
 fixture parity at small scale.
 
 Semantics of the running sums (W1-W3):
@@ -25,6 +26,7 @@ identified and expected counts the same way, R/fuzzylink.R:345-364).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -95,6 +97,24 @@ def _f1_frame(df: DataFrame, p_col: str, w_col: str | None,
     )
 
 
+def _argmax_f1(tp_c, fp_c, yes_mass: float) -> int | None:
+    """``_f1_frame``'s running-sum program in numpy over per-distinct-p
+    contributions in ascending p (fn's equal tp's). The running sums add in
+    the windows' row order, so every F1 is bit-identical to the Spark
+    program. Returns the argmax index, ties on the HIGHEST p
+    (R/fuzzylink.R:368-370), or None when no F1 is positive."""
+    fn = np.concatenate([[0.0], np.cumsum(tp_c)[:-1]])         # mass below
+    tp = np.cumsum(tp_c[::-1])[::-1] + float(yes_mass)         # mass at/above
+    fp = np.cumsum(fp_c[::-1])[::-1]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        prec = tp / (tp + fp)
+        rec = tp / (tp + fn)
+        f1 = 2.0 * prec * rec / (prec + rec)
+    f1 = np.nan_to_num(f1, nan=0.0)
+    best = int(np.flatnonzero(f1 == f1.max())[-1])
+    return best if f1[best] > 0.0 else None
+
+
 def expected_f1_cutoff(
     pairs: DataFrame,
     p_col: str = "match_probability",
@@ -116,69 +136,68 @@ def expected_f1_cutoff(
     ``LinkConfig.cutoff_strict_parity``) for byte-for-byte reference
     reproduction.
     """
-    cols = [p_col] + ([label_col] if label_col and label_col in pairs.columns else [])
-    df = pairs.select(*cols)
     label = label_col if label_col and label_col in pairs.columns else None
+    df = pairs.select(p_col, *([label] if label else []))
 
+    # The F1 evaluated at p counts the p-rows as accepted, but the final
+    # filter is strict (p > cutoff, R/fuzzylink.R:472-473) — so unless
+    # strict_parity, return a cutoff just BELOW the argmax so the optimal
+    # set is what's accepted. (The reference returns the argmax itself,
+    # silently excluding its own optimal row — a deliberate off-by-one
+    # improvement here.) Exact mode uses the midpoint to the next lower
+    # distinct probability; histogram mode steps down half a bucket.
     if exact:
         frame = _f1_frame(df, p_col, None, label)
-    else:
-        b = F.round(F.col(p_col) * bins) / bins
-        grouped = df.withColumn("_pb", b).groupBy(
-            "_pb", *( [label] if label else [] )
-        ).agg(F.count("*").cast("double").alias("_w"))
-        # r6: collect the bounded bucket table (<= bins x 3 rows) and run
-        # the running-sum program over a LOCAL relation — the frame's
-        # argmax job no longer re-scans the pair table (the only O(pairs)
-        # work left is the one bucketing aggregation). Same _f1_frame
-        # program, same bucket rows, so the cutoff is unchanged (bucket
-        # weights are exact integer counts; pytest pins the cutoffs).
-        spark = pairs.sparkSession
-        local = spark.createDataFrame(grouped.collect(), schema=grouped.schema)
-        frame = _f1_frame(local.withColumnRenamed("_pb", p_col), p_col, "_w", label)
+        best = (  # ties on the HIGHEST p (R/fuzzylink.R:368-370)
+            frame.orderBy(F.col("expected_f1").desc(), F.col(p_col).desc())
+            .select(p_col, "expected_f1")
+            .first()
+        )
+        if best is None or best["expected_f1"] <= 0.0:
+            return fallback  # NaN-F1 guard (R/fuzzylink.R:366-370)
+        best_p = float(best[p_col])
+        if strict_parity:
+            return best_p  # reference-exact: argmax returned as-is
+        prev = frame.where(F.col(p_col) < best_p).agg(F.max(p_col)).first()[0]
+        if prev is None:
+            return best_p - 1e-9  # argmax is the global min: accept everything
+        return (best_p + float(prev)) / 2.0
 
-    # tie-break on HIGHEST p, matching the reference's which.max over the
-    # desc-sorted frame (R/fuzzylink.R:368-370) — precision-favoring
-    best = (
-        frame.orderBy(F.col("expected_f1").desc(), F.col(p_col).desc())
-        .select(p_col, "expected_f1")
-        .first()
-    )
-    if best is None or best["expected_f1"] <= 0.0:
-        return fallback  # NaN-F1 guard (R/fuzzylink.R:366-370)
-    best_p = float(best[p_col])
-    if strict_parity:
-        return best_p  # reference-exact: argmax returned as-is
-    # The F1 evaluated at p counts the p-rows as accepted, but the final
-    # filter is strict (p > cutoff, R/fuzzylink.R:472-473) — so return a
-    # cutoff just BELOW the argmax so the optimal set is what's accepted.
-    # (The reference returns the argmax itself, silently excluding its own
-    # optimal row — a deliberate off-by-one improvement here.) Histogram
-    # mode steps down half a bucket; exact mode uses the midpoint to the
-    # next lower distinct probability.
-    if not exact:
-        return best_p - 0.5 / bins
-    prev = frame.where(F.col(p_col) < best_p).agg(F.max(p_col)).first()[0]
-    if prev is None:
-        return best_p - 1e-9  # argmax is the global min: accept everything
-    return (best_p + float(prev)) / 2.0
+    # histogram mode: one bucketing aggregation; its <= bins x 3 (bucket,
+    # label) rows run _f1_frame's program on the driver. Labeled-only
+    # buckets stay zero-expectation candidates (exact pairs sit at p = 1).
+    rows = df.groupBy((F.round(F.col(p_col) * bins) / bins).alias("_pb"),
+                      *([label] if label else [])).agg(
+        F.count("*").alias("_w")).collect()
+    if not rows:
+        return fallback
+    pb, w = (np.array([r[c] for r in rows], dtype=np.float64) for c in ("_pb", "_w"))
+    lab = [r[label] if label else None for r in rows]
+    unl, is_no, is_yes = (np.array([x == v for x in lab], dtype=np.float64) * w
+                          for v in (None, "No", "Yes"))
+    uniq, inv = np.unique(pb, return_inverse=True)
+    best = _argmax_f1(np.bincount(inv, weights=unl * pb),
+                      np.bincount(inv, weights=unl * (1 - pb) + is_no),
+                      is_yes.sum())
+    if best is None:
+        return fallback
+    best_p = float(uniq[best])
+    return best_p if strict_parity else best_p - 0.5 / bins
 
 
 def expected_f1_cutoff_from_hist(ps, ws, fallback: float = 0.5,
                                  yes_mass: float = 0.0,
                                  strict_parity: bool = False) -> float:
-    """Driver-side mirror of the running-sum program over an ALREADY
-    bounded weighted (p, weight) histogram of unlabeled pairs (two-pass
-    mode: pass 1 returns <= bins^2 cells, so no Spark job is needed to
-    pick the cutoff). Same semantics as ``expected_f1_cutoff``:
-    expectations for unlabeled pairs, plus ``yes_mass`` — the count of
-    labeled-Yes/exact pairs, which are accepted at EVERY cutoff and count
-    toward tp unconditionally (matching ``_f1_frame``'s full-window Yes
-    term); argmax F1, precision-favoring tie on highest p, and a cutoff
-    placed just below the argmax so the optimal set survives the strict
-    ``p > cutoff`` accept filter."""
-    import numpy as np
-
+    """Driver-side cutoff over an ALREADY bounded weighted (p, weight)
+    histogram of unlabeled pairs (two-pass mode: pass 1 returns <= bins^2
+    cells, so no Spark job is needed to pick the cutoff). Same objective
+    as ``expected_f1_cutoff``: expectations for unlabeled pairs, plus
+    ``yes_mass`` — the count of labeled-Yes/exact pairs, which are
+    accepted at EVERY cutoff and count toward tp unconditionally
+    (matching ``_f1_frame``'s full-window Yes term); argmax F1 with the
+    highest-p tie-break, and a cutoff at the midpoint to the next lower
+    distinct p so the optimal set survives the strict ``p > cutoff``
+    accept filter."""
     ps = np.asarray(ps, dtype=np.float64)
     ws = np.asarray(ws, dtype=np.float64)
     if ps.size == 0 or ws.sum() <= 0:
@@ -186,18 +205,8 @@ def expected_f1_cutoff_from_hist(ps, ws, fallback: float = 0.5,
     # aggregate per distinct p (tie-determinism), ascending
     uniq, inv = np.unique(ps, return_inverse=True)
     w = np.bincount(inv, weights=ws)
-    tp_c = w * uniq
-    fp_c = w * (1 - uniq)
-    fn = np.concatenate([[0.0], np.cumsum(tp_c)[:-1]])         # mass below
-    tp = np.cumsum(tp_c[::-1])[::-1] + float(yes_mass)         # mass at/above
-    fp = np.cumsum(fp_c[::-1])[::-1]
-    with np.errstate(invalid="ignore", divide="ignore"):
-        prec = tp / (tp + fp)
-        rec = tp / (tp + fn)
-        f1 = 2.0 * prec * rec / (prec + rec)
-    f1 = np.nan_to_num(f1, nan=0.0)
-    best = int(np.flatnonzero(f1 == f1.max())[-1])  # highest-p tie-break
-    if f1[best] <= 0.0:
+    best = _argmax_f1(w * uniq, w * (1 - uniq), yes_mass)
+    if best is None:
         return fallback
     if strict_parity:
         return float(uniq[best])  # reference-exact argmax (R/fuzzylink.R:368-370)

@@ -503,7 +503,9 @@ def fit_mixture2d_em(
     top-component mass splits (match prevalence is unknown; a hint like
     min(|uA|,|uB|)/n_pairs — "each left record has at most one true match"
     — adds a Fellegi-Sunter-informed restart). Best log-likelihood wins.
-    All O(cells) on the driver."""
+    All O(cells) on the driver. Cells are sorted by (x, y) first, so the
+    fit never depends on the order the histogram was collected in."""
+    hist = hist[np.lexsort((hist[:, 1], hist[:, 0]))]
     xs, ys, ws = hist[:, 0], hist[:, 1], hist[:, 2]
     total = ws.sum()
     if total == 0:
@@ -572,15 +574,6 @@ def fit_mixture2d_em(
     if best is None:
         raise ValueError("2-D mixture fit failed for all initializations")
     return best
-
-
-def fit_mixture2d_on_pairs(pairs: DataFrame, fx: str = "sim", fy: str = "jw",
-                           bins: int = 200, k: int = 3,
-                           prevalence_hint: float | None = None) -> Mixture2D:
-    hist = score_histogram_2d(pairs, fx, fy, bins=bins)
-    model = fit_mixture2d_em(hist, k=k, prevalence_hint=prevalence_hint)
-    model.features = (fx, fy)
-    return model
 
 
 # ---------------------------------------------------------------------------

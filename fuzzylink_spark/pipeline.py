@@ -921,44 +921,41 @@ def fuzzylink(
     t0 = _emit(cb, "validate", t0)
 
     sp = build_scored_pairs(spark, dfA, dfB, config, ckpt, labeler)
-    pairs = sp.df
-    t0 = _emit(cb, "block+featurize", t0)
-    # scored STAYS persisted past return: LinkResult.linked/.pairs are lazy
-    # plans over it, and unpersisting here would make the caller's first
-    # action re-run the entire featurize GEMM. Ownership passes to the
-    # caller (LinkResult.release()) — but only a SUCCESSFUL return hands
-    # over a handle, so any error path (degenerate labels in the fit, a
-    # failing sink, ...) must release the caches itself or repeated
-    # failed calls leak executor storage.
-    scored = None
+    # One kernel pass: the pair table is persisted and loaded by one count
+    # (n_pairs); the fit reads it, and the cutoff's bucketing scan loads the
+    # scored cache from it, after which its cache goes (a non-cascading
+    # uncache keeps a loaded dependent cache). scored STAYS persisted past
+    # return — LinkResult.linked/.pairs are lazy plans over it, released by
+    # LinkResult.release(); only a successful return hands that over, so
+    # error paths release every cache here.
+    ir = scored = None
     try:
-        scored, model = fit_and_score(pairs, config, labeler)
+        ir = sp.df.persist()
+        n_pairs = ir.count()
+        t0 = _emit(cb, "block+featurize", t0, n_pairs=n_pairs)
+        scored, model = fit_and_score(ir, config, labeler)
         scored = scored.persist()
         cutoff = expected_f1_cutoff(
             scored, bins=config.cutoff_bins, exact=exact_cutoff,
             fallback=config.fallback_cutoff,
             strict_parity=config.cutoff_strict_parity,
         )
+        ir.unpersist()
         t0 = _emit(cb, "score+calibrate", t0, cutoff=cutoff)
         accepted = accepted_matches(scored, cutoff)
         linked = assemble(dfA, dfB, accepted, config)
-        metrics = {
-            "cutoff": cutoff,
-            "n_pairs": scored.count(),
-            "n_accepted": accepted.count(),
-        }
+        metrics = {"cutoff": cutoff, "n_pairs": n_pairs,
+                   "n_accepted": accepted.count()}
         ckpt.write_lineage()
-        t0 = _emit(cb, "accept+assemble", t0,
-                   n_pairs=metrics["n_pairs"],
+        t0 = _emit(cb, "accept+assemble", t0, n_pairs=n_pairs,
                    n_accepted=metrics["n_accepted"])
     except BaseException:
-        if scored is not None:
-            scored.unpersist()
+        for d in (scored, ir):
+            if d is not None:
+                d.unpersist()
         sp.release_intermediates()
         raise
-    # scored is materialized in cache now — the upstream side caches
-    # (uA/uB/blocks) are dead weight; release them so repeated calls
-    # in one session don't accumulate storage
+    # the upstream side caches (uA/uB/blocks) are dead weight now
     sp.release_intermediates()
     return LinkResult(linked=linked, pairs=scored, cutoff=cutoff,
                       model=model, metrics=metrics)
