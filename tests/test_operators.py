@@ -1,5 +1,5 @@
-"""Unit tests per operator: encoder, cosine, candidates+salting, cutoff,
-sampling, EM mixture, connected components."""
+"""Unit tests per operator: encoder, cosine, tiled candidate pairs and the
+tile kernel, cutoff, sampling, EM mixture, connected components."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzylink_spark.functions.vectors import embed_strings, embed_keys
-from fuzzylink_spark.operators.candidates import candidate_pairs, find_hot_blocks
+from fuzzylink_spark.functions.strdist import jaro_winkler_cross
 from fuzzylink_spark.operators.clustering import (
     clusters_to_pairs,
     connected_components,
@@ -55,36 +55,116 @@ def test_embed_keys_distinct(spark):
     assert len(row["embedding"]) == 32
 
 
-# --- candidates + salting ----------------------------------------------------
+# --- tiled candidate pairs + tile kernel ---------------------------------------
 
-def test_candidate_pairs_plain_and_salted_agree(spark):
-    uA = spark.createDataFrame(
-        [("b1", f"a{i}") for i in range(20)] + [("b2", "x")],
-        "block_key string, key string",
-    )
-    uB = spark.createDataFrame(
-        [("b1", f"b{i}") for i in range(15)] + [("b2", "y")],
-        "block_key string, key string",
-    )
-    plain = candidate_pairs(uA, uB, salt_buckets=1)
-    hot = spark.createDataFrame([("b1",)], "block_key string")
-    salted = candidate_pairs(uA, uB, salt_buckets=4, salted_blocks=hot)
-    assert plain.count() == 20 * 15 + 1
-    assert salted.count() == plain.count()
-    assert plain.select("A", "B").exceptAll(salted.select("A", "B")).count() == 0
+def test_tile_kernel_modes_match_driver_reference(spark):
+    """Every tile-kernel mode, under a plan that splits a block into
+    several tiles, against a driver-side reference: melt emits exactly the
+    within-block cross join ``uA ⋈ uB`` on block_key (each pair once), with
+    the f32 GEMM sim, ``jaro_winkler_cross`` jw and the case-insensitive
+    exact flag; accept = the melt rows that are exact or above the cutoff;
+    band = accept plus flagged near-cutoff rows; hist = the non-exact melt
+    rows binned in float64."""
+    from collections import Counter
 
+    from fuzzylink_spark.operators.features import (
+        block_salt_plan,
+        cogrouped_pair_features,
+        cogrouped_pair_histogram,
+    )
 
-def test_find_hot_blocks(spark):
-    uA = spark.createDataFrame(
-        [("big", f"a{i}") for i in range(100)] + [("small", "a")],
-        "block_key string, key string",
-    )
-    uB = spark.createDataFrame(
-        [("big", f"b{i}") for i in range(100)] + [("small", "b")],
-        "block_key string, key string",
-    )
-    hot = find_hot_blocks(uA, uB, threshold=5000)
-    assert [r["block_key"] for r in hot.collect()] == ["big"]
+    a_rows = ([("b1", f"name {i}") for i in range(20)] + [("b1", "Alpha Beta")]
+              + [("b2", "x"), ("only_a", "z")])
+    b_rows = ([("b1", f"name {i}") for i in range(5, 18)] + [("b1", "alpha beta"),
+              ("b1", "nome 3")] + [("b2", "X"), ("b2", "y"), ("only_b", "r")])
+    uA = spark.createDataFrame(a_rows, "block_key string, key string")
+    uB = spark.createDataFrame(b_rows, "block_key string, key string")
+    plan = block_salt_plan(uA, uB, pair_budget=40)
+    plan_rows = plan.collect()
+    tiles = {r["block_key"]: r["ka"] * r["kb"] for r in plan_rows}
+    assert tiles["b1"] >= 4  # the big block spans several tiles
+
+    def enc(keys):
+        return embed_strings(keys, dim=32)
+
+    ids = {r["key"]: r["id"] for r in uA.unionByName(uB).select(
+        "key", F.xxhash64("key").alias("id")).collect()}
+    key_of = {v: k for k, v in ids.items()}
+    block_of = {r["block_id"]: r["block_key"] for r in plan_rows}
+
+    # driver-side reference: the plain equi join, then per-pair features
+    joined = (uA.withColumnRenamed("key", "A")
+              .join(uB.withColumnRenamed("key", "B"), "block_key").collect())
+    join_keys = [(r["block_key"], r["A"], r["B"]) for r in joined]
+    ref = {}
+    for r in joined:
+        a, b = r["A"], r["B"]
+        sim = (enc([a]) @ enc([b]).T)[0, 0]
+        jw = jaro_winkler_cross([a.lower()], [b.lower()])[0, 0]
+        ref[(r["block_key"], a, b)] = (np.float32(sim), np.float32(jw),
+                                       a.lower() == b.lower())
+
+    def keyed(rows):
+        return [(block_of[r["block_id"]], key_of[r["a_id"]], key_of[r["b_id"]])
+                for r in rows]
+
+    kw = dict(encoder=enc, salt_plan=plan)
+    melt = cogrouped_pair_features(uA, uB, **kw).collect()
+    melt_keys = keyed(melt)
+    assert Counter(melt_keys) == Counter(join_keys)  # every pair exactly once
+    got = dict(zip(melt_keys, melt))
+    for k, (sim, jw, exact) in ref.items():
+        r = got[k]
+        assert r["sim"] == pytest.approx(float(sim), abs=1e-6)
+        assert r["jw"] == float(jw)
+        assert r["exact"] == exact
+    assert ref[("b1", "Alpha Beta", "alpha beta")][2] and ref[("b2", "x", "X")][2]
+
+    def post(x, y):
+        return (x + y) / 2
+
+    # float64 posterior on the f32 features; exact pairs score 1.0
+    p = {k: 1.0 if r["exact"] else post(float(r["sim"]), float(r["jw"]))
+         for k, r in got.items()}
+
+    def accepted_at(c):
+        return {k for k, v in p.items() if v > c or got[k]["exact"]}
+
+    cutoff = float(np.median(list(p.values())))
+    # at cutoff 1.0 only the exact flag accepts
+    for c in (1.0, cutoff):
+        acc = cogrouped_pair_features(uA, uB, accept=(post, c), **kw).collect()
+        assert Counter(keyed(acc)) == Counter(accepted_at(c))
+        for k, r in zip(keyed(acc), acc):
+            assert r["match_probability"] == p[k]
+    accepted = accepted_at(cutoff)
+
+    delta = 0.05
+    near = {k for k, v in p.items() if abs(v - cutoff) <= delta} - accepted
+    for k_top in (0, 2):
+        band = cogrouped_pair_features(
+            uA, uB, accept=(post, cutoff), band=(delta, 10**6, k_top), **kw
+        ).collect()
+        band_keys = keyed(band)
+        assert len(band_keys) == len(set(band_keys))
+        assert set(band_keys) >= accepted | near
+        if k_top == 0:  # cap never binds: exactly accept + the band
+            assert set(band_keys) == accepted | near
+        for k, r in zip(band_keys, band):
+            assert r["accepted"] == (k in accepted)
+            assert r["match_probability"] == p[k]
+
+    bins, lo, hi = 20, -1.0, 1.0
+    width = (hi - lo) / bins
+    want = Counter()
+    for r in melt:
+        if not r["exact"]:
+            bx = int(np.clip((np.float64(r["sim"]) - lo) / width, 0, bins - 1))
+            by = int(np.clip((np.float64(r["jw"]) - lo) / width, 0, bins - 1))
+            want[(bx, by)] += 1
+    hist = cogrouped_pair_histogram(uA, uB, bins=bins, lo=lo, hi=hi,
+                                    **kw).collect()
+    assert {(r["bx"], r["by"]): r["n"] for r in hist} == dict(want)
 
 
 # --- cutoff ------------------------------------------------------------------

@@ -319,6 +319,10 @@ def test_block_salt_plan_target_cells(spark):
                              target_cells=8).first()
     # budget shrinks to max(50k, 160k/8) = 50k -> ceil(160k/50k) = 4 cells
     assert fanned["ka"] * fanned["kb"] >= 4
+    # the 50k floor bounds only the derived shrink: an explicit smaller
+    # budget is kept -> ceil(160k/1k) = 160 cells
+    small = block_salt_plan(uA, uB, pair_budget=1000, target_cells=8).first()
+    assert small["ka"] * small["kb"] >= 160
 
 
 @pytest.mark.parametrize("hashed", [True, False])

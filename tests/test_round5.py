@@ -80,34 +80,6 @@ def test_max_pos_per_fp_zero_rejected():
         exact_substring_pairs(None, max_pos_per_fp=-3)
 
 
-def test_arrow_melt_parity_with_pandas(spark):
-    """The Arrow-native plain-melt kernel (applyInArrow, r5) must emit
-    bit-identical pair IR to the pandas kernel — same tiles, same GEMM,
-    same narrow schema."""
-    from fuzzylink_spark.operators.blocking import add_block_key
-    from fuzzylink_spark.operators.candidates import unique_keys_per_block
-    from fuzzylink_spark.operators.features import cogrouped_pair_features
-    from fuzzylink_spark.functions.vectors import embed_strings
-
-    dfa, dfb, _ = voters(spark, n_base=50, seed=13)
-    uA = unique_keys_per_block(
-        add_block_key(dfa, ["city"]), "full_name")
-    uB = unique_keys_per_block(
-        add_block_key(dfb, ["city"]), "full_name")
-
-    def enc(keys):
-        return embed_strings(keys, dim=32)
-
-    def rows(arrow):
-        out = cogrouped_pair_features(uA, uB, encoder=enc,
-                                      arrow_melt=arrow)
-        assert out.columns == ["block_id", "a_id", "b_id", "sim", "jw",
-                               "exact"]
-        return sorted(map(tuple, out.collect()))
-
-    assert rows(True) == rows(False)
-
-
 def test_anchor_extend_pathological_repeats_bounded(spark):
     """Verdict r4 item 7: two highly repetitive near-identical docs put
     surviving anchors on MANY distinct diagonals; per-diagonal re-extension
